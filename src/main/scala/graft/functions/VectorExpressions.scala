@@ -135,6 +135,11 @@ object GraftFunctions {
       (exprs: Seq[Expression]) => NfcLowerSimple(Cast(exprs.head, StringType))),
     ("graft_deflate_len", classOf[DeflateLen],
       (exprs: Seq[Expression]) => DeflateLen(Cast(exprs.head, StringType))),
+    // arg 0 is the decimal product the kernel replaces (a product of
+    // CAST(<double> AS DECIMAL(p, s)) factors, see Exact); it is taken
+    // apart at analysis, so the casts and decimal multiplies never run
+    ("graft_exact_sum", classOf[ExactSum],
+      (exprs: Seq[Expression]) => ExactSum.fromProduct(exprs.head)),
     ("graft_heavy_hitters", classOf[HeavyHittersAgg],
       (exprs: Seq[Expression]) => new HeavyHittersAgg(Cast(exprs.head, StringType))),
     // arg 1 must be a literal output-dimension index (it selects the

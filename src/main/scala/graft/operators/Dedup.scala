@@ -875,13 +875,6 @@ object Dedup extends QueryModule {
   private val NeardupTables =
     Seq("survivors", "surv_shingles", "surv_pairs", "surv_labels", "doc_labels")
 
-  /** Where the persisted near-dup artifact for a fixture dir lives —
-    * ArtifactStore's tmpdir-scoped, full-dir-hash-keyed, signature-
-    * validated convention (same policy as the IVF-PQ and admission
-    * indexes). */
-  def neardupArtifactPath(dir: String): String =
-    graft.sources.ArtifactStore.path("neardup", dir)
-
   /** The build body: the fuzzy-dedup front half, once. Pairs are written
     * FIRST and the label propagation reads them BACK from parquet, so
     * the O(log n) iterative joins carry a tiny pair scan instead of the

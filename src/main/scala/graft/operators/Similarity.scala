@@ -468,20 +468,27 @@ object Similarity extends QueryModule {
     var cents = e.orderBy(col("vec_id")).limit(k)
       .select(col("vec_id").as("cluster"), col("v").as("cv"))
     var prev: DataFrame = null
-    for (_ <- 1 to iters) {
-      // eager checkpoint: materializes this round's k×dim model now (the
-      // same one corpus pass it would cost lazily) so the PREVIOUS
-      // round's dead blocks can be released immediately instead of
-      // accumulating until GC (q77's loop hygiene)
-      cents = kmAssign(e, cents, carryVector = true)
-        .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("cluster")).pivot("pos", (0 until KmeansDim).map(_.toString))
-        .agg(round(avg(col("x")), 6))
-        .select(col("cluster"),
-          array((0 until KmeansDim).map(i => col(s"`$i`")): _*).as("cv"))
-        .localCheckpoint()
+    try {
+      for (_ <- 1 to iters) {
+        // eager checkpoint: materializes this round's k×dim model now (the
+        // same one corpus pass it would cost lazily) so the PREVIOUS
+        // round's dead blocks can be released immediately instead of
+        // accumulating until GC (q77's loop hygiene)
+        cents = kmAssign(e, cents, carryVector = true)
+          .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
+          .groupBy(col("cluster")).pivot("pos", (0 until KmeansDim).map(_.toString))
+          .agg(round(avg(col("x")), 6))
+          .select(col("cluster"),
+            array((0 until KmeansDim).map(i => col(s"`$i`")): _*).as("cv"))
+          .localCheckpoint()
+        if (prev != null) graft.functions.ScopedCache.releaseCheckpoint(prev)
+        prev = cents
+      }
+    } catch { case t: Throwable =>
+      // a failed round leaves no generation pinned (on success the last
+      // one is the returned model)
       if (prev != null) graft.functions.ScopedCache.releaseCheckpoint(prev)
-      prev = cents
+      throw t
     }
     cents
   }
@@ -1656,8 +1663,6 @@ object Similarity extends QueryModule {
 
   private def baseSide(emb: DataFrame): DataFrame =
     emb.filter(pmod(col("vec_id"), lit(DeltaSplitMod)) =!= 0L)
-  private def batchSide(emb: DataFrame): DataFrame =
-    emb.filter(pmod(col("vec_id"), lit(DeltaSplitMod)) === 0L)
 
   /** The six tables of a delta-maintained index: the four base tables
     * plus the appended segment's cells/codes. Base segments are
@@ -1683,25 +1688,31 @@ object Similarity extends QueryModule {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val isBatch = pmod(col("vec_id"), lit(DeltaSplitMod)) === 0L
-    def segmentPair(baseName: String, deltaName: String, all: DataFrame): Unit = {
-      val a = all.localCheckpoint()
-      a.filter(!isBatch).write.mode("overwrite").parquet(s"$base/$baseName")
-      a.filter(isBatch).write.mode("overwrite").parquet(s"$base/$deltaName")
-      graft.functions.ScopedCache.releaseCheckpoint(a)
-    }
     val fCell = Future {
       val cellModel = kmeansModelOf(baseSide(emb))
       cellModel.write.mode("overwrite").parquet(s"$base/centroids")
-      segmentPair("cells", "cells_delta", segmentCells(emb, cellModel))
+      writeSegmentPair(segmentCells(emb, cellModel), s"$base/cells", s"$base/cells_delta")
     }
     val fPq = Future {
       val pqModel = pqModelOf(baseSide(emb))
       pqModel.write.mode("overwrite").parquet(s"$base/pq_codebook")
-      segmentPair("codes", "codes_delta", segmentCodes(emb, pqModel))
+      writeSegmentPair(segmentCodes(emb, pqModel), s"$base/codes", s"$base/codes_delta")
     }
     Await.result(fCell, Duration.Inf)
     Await.result(fPq, Duration.Inf)
+  }
+
+  /** Split one materialized assignment into the immutable base segment
+    * and the append-batch segment. The checkpoint is released even when
+    * a write fails, so a failed build leaves no pinned blocks. */
+  private[graft] def writeSegmentPair(all: DataFrame, basePath: String,
+      deltaPath: String): Unit = {
+    val isBatch = pmod(col("vec_id"), lit(DeltaSplitMod)) === 0L
+    val a = all.localCheckpoint()
+    try {
+      a.filter(!isBatch).write.mode("overwrite").parquet(basePath)
+      a.filter(isBatch).write.mode("overwrite").parquet(deltaPath)
+    } finally graft.functions.ScopedCache.releaseCheckpoint(a)
   }
 
   /** Append a batch of NEW vectors to an EXISTING index at `base`:

@@ -103,16 +103,6 @@ object EventStreams {
               col("n_users_approx"))
   }
 
-  /** Sliding windows: each event lands in windowDur/slide windows. */
-  def slidingCounts(events: DataFrame,
-                    windowDur: String = "10 minutes",
-                    slide: String = "5 minutes",
-                    watermarkDelay: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDur, slide), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("user_id"), col("n"))
-
   /** Built-in session windows (gap-based, T3). */
   def sessionWindowCounts(events: DataFrame,
                           gap: String = "30 minutes",
@@ -380,16 +370,6 @@ object EventStreams {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(outDir)
-
-  /** Streaming sink wiring for [[writeBatchIdempotent]]. */
-  def exactlyOnceSink(events: DataFrame, outDir: String,
-                      checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        writeBatchIdempotent(batch, id, outDir)
-      }
-      .start()
 
   // ---- streaming dedup + reprocessing (T10/T11) ------------------------
 

@@ -162,10 +162,41 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("whole-stage codegen is active in the aggregation path (q01)") {
-    // codegen'd operators carry the `*(stageId)` marker in plan text
-    val plan = executedPlan(Relational.pricingSummary(spark, sf0001))
-    assert(plan.contains("*(1) HashAggregate") || plan.contains("*(1) Filter"),
-      plan.take(3000))
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Partial}
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.types.DecimalType
+    val df = Relational.pricingSummary(spark, sf0001)
+    df.collect()
+    val nodes = allNodes(df.queryExecution.executedPlan)
+    val partials = nodes.collect {
+      case h: HashAggregateExec if h.aggregateExpressions.nonEmpty &&
+          h.aggregateExpressions.forall(_.mode == Partial) => h
+    }
+    assert(partials.size === 1, nodes.mkString("\n"))
+    val partial = partials.head
+    // the partial aggregate is fused into a codegen stage (not merely a
+    // neighbouring Filter): the stage's own nodes stop at InputAdapter
+    def stageNodes(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p match { case _: InputAdapter => Nil case _ => p.children.flatMap(stageNodes) })
+    assert(nodes.exists {
+      case w: WholeStageCodegenExec => stageNodes(w.child).exists(_ eq partial)
+      case _ => false
+    }, partial.toString)
+    // the money sums run the exact kernel, not Spark's decimal path: no
+    // per-row cast to decimal and no decimal-typed aggregation buffer
+    val fns = partial.aggregateExpressions.map(_.aggregateFunction)
+    // four distinct sums: the two averages reuse sum_qty's and sum_base_price's
+    assert(fns.count(_.isInstanceOf[graft.functions.ExactSum]) === 4, fns)
+    assert(fns.forall(f => f.isInstanceOf[graft.functions.ExactSum] || f.isInstanceOf[Count]), fns)
+    assert(!partial.expressions.exists(_.exists {
+      case c: Cast => c.dataType.isInstanceOf[DecimalType]
+      case _ => false
+    }), partial.toString)
+    assert(!partial.toString.toLowerCase.contains("as decimal"), partial.toString)
+    assert(!fns.flatMap(_.aggBufferAttributes).exists(_.dataType.isInstanceOf[DecimalType]), fns)
+    assert(!partial.output.exists(_.dataType.isInstanceOf[DecimalType]), partial.output)
   }
 
   test("q72 DF gate is an anti-join and the shingle self-join stays equi") {
